@@ -1068,8 +1068,9 @@ object Queries {
 
   /** Full KG pipeline output — the flagship, oracle-gated end-to-end: the
     * word-bounded mention scan is re-expressed in SQL as a generate_series
-    * position probe, then the same top-1 link window, adjacency lead window,
-    * and (subj,pred,obj,url) min-ts dedup as the Spark plan.
+    * position probe, then a top-1 link window, an adjacency lead window
+    * and the (subj,pred,obj,url) min-ts dedup — the same rules the Spark
+    * plan's page-local kernel applies.
     */
   def q40Pipeline(s: SparkSession, dir: String): DataFrame =
     KgPipeline.run(s, dir, numPartitions = s.sparkContext.defaultParallelism)

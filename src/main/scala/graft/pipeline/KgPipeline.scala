@@ -2,26 +2,31 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.model.{Dict, Page}
-import graft.operators.{Linking, Mentions}
+import graft.model.{Alias, Dict, Page}
 import graft.functions.SparqlColumns
-import graft.text.HtmlCodec
+import graft.text.{AhoCorasick, HtmlCodec}
 
 /** The flagship end-to-end KG-construction pipeline (north_star): pages →
-  * per-partition HTML→text extraction (byte-identity checked) → Aho-Corasick
-  * mention scan over the broadcast dictionary → entity linking (broadcast
-  * join + top-1 window) → triple emission (about + adjacency) → QID/PID
-  * canonicalization → windowed distinct over (subj, pred, obj, url) →
+  * HTML→text extraction → Aho-Corasick mention scan over the broadcast
+  * dictionary → top-1 entity linking → triple emission (about + adjacency)
+  * → QID/PID canonicalization → distinct over (subj, pred, obj, url) →
   * SPARQL command rendering.
   *
+  * Every triple is a function of its own page only: aboutness is keyed by
+  * url and adjacency pairs mentions of one page. So extraction, scan, link
+  * and emit are ONE page-local kernel (`linkPage` + `emitPage`), run as a
+  * Catalyst `explode` over a Scala UDF on (url, html); url and ts stay
+  * attributes of the Generate, so the input partitioning survives it.
+  *
   * Physical shape (verify with .explain("formatted")):
-  *  - ONE explicit url-hash repartition before extraction (north_rule);
-  *    extraction + scan + linking-join are then narrow / broadcast — no
-  *    further shuffle until the top-1 window (keyed by high-cardinality
-  *    (url, begin), skew-free) and the final dedup aggregate.
-  *  - the html binary column is dropped immediately after extraction so
-  *    shuffles move only small strings.
+  *  - on plain input, scan → kernel → partial dedup aggregate run fused in
+  *    the parallel scan tasks; the only exchange is the map-side-combined
+  *    dedup aggregate, which moves one row per distinct triple;
+  *  - on url-partitioned input (`run`), the input `repartition(url)`
+  *    already satisfies the dedup aggregate: no exchange follows it;
+  *  - no window, no join, no broadcast exchange: the dictionary travels as
+  *    broadcast variables, and html bytes never leave the task that reads
+  *    or synthesizes them.
   */
 object KgPipeline {
 
@@ -43,149 +48,93 @@ object KgPipeline {
     })
   }
 
-  /** Linked top-1 entities per mention occurrence, with warc_ts carried
-    * through the scan — one pass over the pages, html touched exactly once
-    * (no join back to the page table, which would rescan the binary column).
-    *
-    * Shuffle discipline: exactly ONE exchange — the explicit
-    * `repartition(url)` on the raw mentions. Everything downstream is
-    * partitioning-compatible: the broadcast join streams, the top-1 window
-    * clusters by (url, surface, begin) ⊇ {url} so HashPartitioning(url)
-    * already satisfies it (sort only, no exchange), and the same holds for
-    * the adjacency window and the final dedup aggregate in `triples`.
+  /** One mention occurrence of a page linked to its top-1 QID. */
+  final case class LinkedMention(surface: String, begin: Int, qid: String, score: Double)
+
+  /** One triple emitted by a page (its url and ts are the page's). */
+  final case class PageTriple(subj: String, pred: String, obj: String)
+
+  /** Best alias per surface under the pipeline's top-1 rule: prior desc,
+    * then qid asc.
     */
-  def linkedMentions(
-      spark: SparkSession, pages: Dataset[Page], urlParts: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    val trie = spark.sparkContext.broadcast(graft.text.AhoCorasick.build(Dict.surfaces))
-    val mismatches = spark.sparkContext.longAccumulator("extract_mismatches")
-    val raw = pages
-      .flatMap { p =>
-        val text = HtmlCodec.extract(p.html)
-        if (text != p.text) mismatches.add(1)
-        trie.value.scan(text, wordBounds = true).map { m =>
-          (p.url, p.warc_ts, m.pattern, m.begin)
-        }
-      }
-      .toDF("url", "warc_ts", "surface", "begin")
-    // the pipeline's one wide op (mentions, not html bytes); an explicit
-    // width (run() passes its numPartitions) bounds the map-tasks ×
-    // shuffle-partitions file count of this exchange — None keeps the
-    // session's shuffle width (the scaling job's measured configuration)
-    val mentions = urlParts match {
-      case Some(n) => raw.repartition(n, col("url"))
-      case None    => raw.repartition(col("url"))
+  private def aliasBest: Map[String, Alias] =
+    Dict.aliases.groupBy(_.surface).map { case (s, as) => s -> as.minBy(a => (-a.prior, a.qid)) }
+
+  /** The kernel's link step: extract(html) → word-bounded Aho-Corasick scan
+    * → top-1 link, in (begin, surface) order — the order adjacency reads.
+    */
+  private def linkPage(trie: AhoCorasick, best: Map[String, Alias], html: Array[Byte]): Seq[LinkedMention] =
+    trie.scan(HtmlCodec.extract(html), wordBounds = true)
+      .flatMap(m => best.get(m.pattern).map(a => LinkedMention(m.pattern, m.begin, a.qid, a.prior)))
+      .sortBy(m => (m.begin, m.surface))
+
+  private val FollowedBy = "wdt:" + Dict.properties("followed_by")
+
+  /** The kernel's emit step, distinct within the page:
+    *  - page-aboutness: (data:<url>, schema:about, wd:Q…) per linked QID —
+    *    the analogue of the reference's schema-level rows
+    *    (sample_result.txt:25-27);
+    *  - adjacency: consecutive mentions within `maxGap` chars whose QIDs
+    *    differ emit (wd:Q1, wdt:P1002, wd:Q2) (followed_by, Dict.properties).
+    */
+  private def emitPage(url: String, linked: Seq[LinkedMention], maxGap: Int): Seq[PageTriple] = {
+    val about = linked.map(_.qid).distinct.map(q => PageTriple("data:" + url, "schema:about", "wd:" + q))
+    val adjacent = linked.zip(linked.drop(1)).collect {
+      case (a, b) if b.begin - a.begin <= maxGap && a.qid != b.qid =>
+        PageTriple("wd:" + a.qid, FollowedBy, "wd:" + b.qid)
     }
-    import org.apache.spark.sql.functions.broadcast
-    val cands = mentions
-      .join(broadcast(Dict.aliases.toDF()), Seq("surface"))
-      .select(col("url"), col("warc_ts"), col("surface"), col("begin"),
-        col("qid"), col("prior").as("score"))
-    Linking.topK(cands, 1)
+    about ++ adjacent.distinct
   }
 
-  /** Triples from linked mentions:
-    *  - page-aboutness: (data:<url>, schema:about, wd:Q…) — the analogue of
-    *    the reference's schema-level rows (sample_result.txt:25-27);
-    *  - adjacency: consecutive mentions within `maxGap` chars emit
-    *    (wd:Q1, wdt:P1002, wd:Q2) (followed_by, Dict.properties).
-    * Output columns: subj, pred, obj, url, ts.
-    *
-    * Both triple kinds come out of ONE pass over the linked mentions (lead
-    * window + explode of a 2-element struct array) instead of a union of two
-    * recomputed branches — the source is scanned once and, given the
-    * url-partitioning from linkedMentions, no further shuffle occurs here.
+  /** `linkPage` over the dictionary, shipped once per call as broadcast
+    * variables (the trie and the top-1 map), not as a broadcast join.
     */
-  def triples(
-      spark: SparkSession, pages: Dataset[Page], maxGap: Int = 30,
-      urlParts: Option[Int] = None): DataFrame = {
-    val linked = linkedMentions(spark, pages, urlParts)
-    val w = Window.partitionBy(col("url")).orderBy(col("begin").asc, col("surface").asc)
-    val adjOk =
-      col("next_qid").isNotNull &&
-        col("next_begin") - col("begin") <= maxGap &&
-        col("qid") =!= col("next_qid")
-    linked
-      .withColumn("next_qid", lead(col("qid"), 1).over(w))
-      .withColumn("next_begin", lead(col("begin"), 1).over(w))
-      .select(
-        col("url"),
-        col("warc_ts").as("ts"),
-        explode(array(
-          struct(
-            concat(lit("data:"), col("url")).as("subj"),
-            lit("schema:about").as("pred"),
-            concat(lit("wd:"), col("qid")).as("obj")
-          ),
-          struct(
-            when(adjOk, concat(lit("wd:"), col("qid"))).as("subj"),
-            lit("wdt:" + Dict.properties("followed_by")).as("pred"),
-            when(adjOk, concat(lit("wd:"), col("next_qid"))).as("obj")
-          )
-        )).as("t")
-      )
-      .filter(col("t.subj").isNotNull)
-      .select(col("t.subj").as("subj"), col("t.pred").as("pred"),
-        col("t.obj").as("obj"), col("url"), col("ts"))
+  private def linker(spark: SparkSession): Array[Byte] => Seq[LinkedMention] = {
+    val trie = spark.sparkContext.broadcast(AhoCorasick.build(Dict.surfaces))
+    val best = spark.sparkContext.broadcast(aliasBest)
+    html => linkPage(trie.value, best.value, html)
+  }
+
+  /** Linked top-1 mentions per page occurrence — the kernel's link step as
+    * a plan of its own: url, warc_ts, surface, begin, qid, score. Page-local
+    * like `triples`, so it adds no exchange.
+    */
+  def linkedMentions(spark: SparkSession, pages: Dataset[Page]): DataFrame = {
+    val link = udf(linker(spark))
+    pages.select(col("url"), col("warc_ts"), explode(link(col("html"))).as("m"))
+      .select(col("url"), col("warc_ts"), col("m.surface"), col("m.begin"), col("m.qid"),
+        col("m.score"))
+  }
+
+  /** Triples of every page row, distinct within the row (not across rows of
+    * one url: `dedupTriples` does that). Output columns: subj, pred, obj,
+    * url, ts. The same plan serves batch, incremental landing, Manifest
+    * recompute and Structured Streaming (StreamIngest.streamTriples): it
+    * holds no window or stateful operator.
+    */
+  def triples(spark: SparkSession, pages: Dataset[Page], maxGap: Int = 30): DataFrame = {
+    val link = linker(spark)
+    val kernel = udf((url: String, html: Array[Byte]) => emitPage(url, link(html), maxGap))
+    pages.select(col("url"), col("warc_ts").as("ts"),
+        explode(kernel(col("url"), col("html"))).as("t"))
+      .select(col("t.subj"), col("t.pred"), col("t.obj"), col("url"), col("ts"))
   }
 
   /** Windowed distinct over (subj, pred, obj, url) with earliest-ts survivor
     * (north_rule A4). Expressed as an aggregate (min over the only non-key
     * column) rather than a row_number window: identical rows out, but the
     * hash aggregate combines map-side, so the shuffle moves one row per key
-    * instead of one per duplicate — the difference between shuffling ~N
-    * mentions and ~N/dup-factor triples at 100 TB. (The general survivor
-    * pick for arbitrary payload columns is Dedup.windowedDistinct.)
+    * instead of one per duplicate. (The general survivor pick for arbitrary
+    * payload columns is Dedup.windowedDistinct.)
     */
   def dedupTriples(t: DataFrame): DataFrame =
     t.groupBy(col("subj"), col("pred"), col("obj"), col("url"))
       .agg(min(col("ts")).as("ts"))
 
-  final case class TripleRow(subj: String, pred: String, obj: String, url: String,
-      ts: java.sql.Timestamp)
-
-  /** Best QID per surface under the pipeline's top-1 rule (prior desc, qid
-    * asc) — the page-local equivalent of the broadcast-join + window.
-    */
-  def aliasBest: Map[String, String] =
-    Dict.aliases.groupBy(_.surface).map { case (s, as) =>
-      s -> as.minBy(a => (-a.prior, a.qid)).qid
-    }
-
-  /** Page-local form of the whole triple kernel: extraction → scan → top-1
-    * link → aboutness + adjacency → within-page distinct, inside ONE pure
-    * function. Valid because every pipeline triple is a function of its own
-    * page only (the dedup key includes url; the adjacency window partitions
-    * by url), so the distributed plan and this local fold are provably the
-    * same row set (asserted in StreamingSpec against `run`). This is the
-    * streaming-safe form — no window or stateful operator, so it runs
-    * unchanged under Structured Streaming (StreamIngest.streamTriples) —
-    * and the unit of Manifest partition recompute.
-    */
-  def pageTriples(
-      trie: graft.text.AhoCorasick,
-      best: Map[String, String],
-      p: Page,
-      maxGap: Int = 30
-  ): Seq[TripleRow] = {
-    val text = HtmlCodec.extract(p.html)
-    val ms = trie.scan(text, wordBounds = true).sortBy(m => (m.begin, m.pattern))
-    val linked = ms.flatMap(m => best.get(m.pattern).map(q => (m.begin, q)))
-    val out = scala.collection.mutable.LinkedHashSet[(String, String, String)]()
-    linked.foreach { case (_, q) => out += (("data:" + p.url, "schema:about", "wd:" + q)) }
-    linked.sliding(2).foreach {
-      case Seq((b1, q1), (b2, q2)) if b2 - b1 <= maxGap && q1 != q2 =>
-        out += (("wd:" + q1, "wdt:" + Dict.properties("followed_by"), "wd:" + q2))
-      case _ => ()
-    }
-    out.toSeq.map { case (s, pr, o) => TripleRow(s, pr, o, p.url, p.warc_ts) }
-  }
-
   /** Full pipeline → deduped canonical triples. */
   def run(spark: SparkSession, dir: String, numPartitions: Int = 32): DataFrame = {
     import graft.sources.Tables
-    val pages = Tables.pagesPartitioned(spark, dir, numPartitions)
-    dedupTriples(triples(spark, pages, urlParts = Some(numPartitions)))
+    dedupTriples(triples(spark, Tables.pagesPartitioned(spark, dir, numPartitions)))
   }
 
   /** Node table of the materialized graph: every entity appearing as a

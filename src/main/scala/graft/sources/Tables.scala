@@ -341,23 +341,23 @@ object Tables {
     * 2024-01-01 + doc_id minutes, html generated from text such that
     * extract(html) == text byte-identically.
     *
-    * The html synthesis is a narrow per-row map (no shuffle); everything
-    * before it is plain Catalyst projection so column pruning reaches the
-    * parquet scan.
+    * The html synthesis is a per-row UDF in the same Catalyst projection
+    * (no shuffle), so column pruning reaches the parquet scan and a url
+    * partitioning of the rows survives it.
     */
   def pages(spark: SparkSession, dir: String): Dataset[Page] =
     pagesWhere(spark, dir, lit(true))
 
   /** `pages` restricted to a document predicate — the batch-ingest read: the
-    * filter sits directly on the documents scan (BEFORE the html synthesis
-    * map), so a day-batch read scans only that batch's rows wherever the
+    * filter sits directly on the documents scan (BEFORE the html synthesis),
+    * so a day-batch read scans only that batch's rows wherever the
     * predicate is pushable, never synthesizing pages it will drop.
     */
   def pagesWhere(spark: SparkSession, dir: String, pred: Column): Dataset[Page] =
     pagesShaped(spark, dir, pred, identity)
 
   /** `pagesWhere` with a caller-chosen re-shaping step applied BETWEEN the
-    * narrow projection and the html-synthesis map — so a repartition
+    * narrow projection and the html synthesis — so a repartition
     * shuffles (url, ts, text, lang) rows, never the synthesized html bytes.
     */
   private def pagesShaped(
@@ -374,17 +374,19 @@ object Tables {
         col("text"),
         col("lang")
       )
+    // html as a column expression, not a typed map: a typed map would
+    // re-create `url`, losing the partitioning `shape` set on it
+    val html = udf((url: String, text: String) => HtmlCodec.generate(url, text))
     shape(narrow)
-      .as[(String, java.sql.Timestamp, String, String)]
-      .mapPartitions(_.map { case (url, ts, text, lang) =>
-        Page(url, ts, HtmlCodec.generate(url, text), text, lang)
-      })
+      .select(col("url"), col("warc_ts"), html(col("url"), col("text")).as("html"),
+        col("text"), col("lang"))
+      .as[Page]
   }
 
   /** Page table pre-partitioned by url hash — the explicit repartitioning the
     * north_rule requires ahead of the extraction stage, so parallelism scales
     * with cores/executors independent of input file splits. The exchange
-    * sits BELOW the html-synthesis map (guide §8: decide placement on small
+    * sits BELOW the html synthesis (guide §8: decide placement on small
     * rows, synthesize the heavy payload after the shuffle) — it moves the
     * ~300 B projected document row, not the ~2.5 KB page with html, and the
     * synthesis CPU lands already balanced.

@@ -48,6 +48,27 @@ class PipelineSpec extends SparkSpec {
     assert(triples == expected)
   }
 
+  test("duplicate-url rows: each row emits its own triples, then dedup keeps the min ts") {
+    import spark.implicits._
+    import graft.model.Page
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def page(t: String, text: String) =
+      Page("u", ts(t), graft.text.HtmlCodec.generate("u", text), text, "en")
+    // offsets 0 ("spark") and 3 ("ab query") come from different texts:
+    // they must not form an adjacency pair
+    val pages = Seq(
+      page("2024-01-03 00:00:00", "spark"),
+      page("2024-01-02 00:00:00", "ab query"),
+      page("2024-01-01 00:00:00", "query")
+    ).toDS()
+    val got = KgPipeline.dedupTriples(KgPipeline.triples(spark, pages))
+      .select("subj", "pred", "obj", "url", "ts").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getTimestamp(4)))
+    assert(got.toSet == Set(
+      ("data:u", "schema:about", "wd:Q1001", "u", ts("2024-01-03 00:00:00")),
+      ("data:u", "schema:about", "wd:Q1011", "u", ts("2024-01-01 00:00:00"))))
+  }
+
   test("emit: reference-shaped INSERT command blocks, sorted within block") {
     import spark.implicits._
     val t = Seq(
